@@ -113,14 +113,12 @@ class TableSpec:
         (crypto_data_pipeline_duckdb.py:1553-1559)."""
         from pyspark.sql import functions as F
 
-        out = df
         existing = set(df.columns)
-        for f in self.schema.fields:
-            if f.name in existing:
-                out = out.withColumn(f.name, F.col(f.name).cast(f.dataType))
-            else:
-                out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return out.select(*self.columns)
+        return df.select(*[
+            (F.col(f.name) if f.name in existing else F.lit(None))
+            .cast(f.dataType).alias(f.name)
+            for f in self.schema.fields
+        ])
 
 
 _OHLCV = {

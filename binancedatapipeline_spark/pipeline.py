@@ -4,7 +4,10 @@ Mirrors ``CryptoDataPipeline.update_all`` ordering (symbols tables
 first — kline fetches read them — then klines, then derived tables;
 crypto_data_pipline_clickhouse.py:1862-1890) and
 ``update_market_data``'s incremental window computation
-(ch:1795-1860) on top of the Warehouse + source connectors.
+(ch:1795-1860) on top of the Warehouse + source connectors. The tiers
+run in that order; the tables within one tier run concurrently, one
+thread each, so their Spark jobs overlap instead of queueing behind
+each other's scheduling floor.
 
 ``run_forever`` is the scheduler shell (APScheduler cron minute=58
 with an immediate catch-up run when started past the minute,
@@ -20,6 +23,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 from binancedatapipeline_spark import catalog
@@ -29,6 +33,7 @@ from binancedatapipeline_spark.plans.validate import validate_klines
 from binancedatapipeline_spark.warehouse import Warehouse
 
 FetchFn = Callable[[SparkSession, datetime, datetime], DataFrame]
+TIERS = ("dim", "fact", "derived")  # update_all's dependency order
 
 
 @dataclass
@@ -59,41 +64,59 @@ class Pipeline:
                      backfill_start: datetime | None = None) -> int:
         """One incremental tick for one table: window = [watermark −
         lookback, now] (full backfill window when the table is
-        empty), fetch, PK-upsert. Returns rows upserted."""
+        empty), fetch, PK-upsert. Returns rows upserted (after the
+        upsert's keep-last dedup); an empty fetch leaves the table
+        untouched. The fetch is cached for the length of the call so
+        the upsert's count and its write call the source once."""
         job = self.jobs[name]
         now = now or _utcnow()
+        start = now
         if job.spec.needs_incremental:
-            start = self.warehouse.incremental_start(job.spec, now)
-            if start is None:
-                start = backfill_start or (now - timedelta(days=30))
-            rows = job.fetch(self.spark, start, now)
-            rows = rows.cache()
-            n = rows.count()
-            if n:
-                self.warehouse.upsert(job.spec, rows, order_col=job.order_col)
-        else:
-            rows = job.fetch(self.spark, now, now).cache()
-            n = rows.count()
-            if n:
-                self.warehouse.overwrite(job.spec, rows)
+            start = (self.warehouse.incremental_start(job.spec, now)
+                     or backfill_start or now - timedelta(days=30))
+        rows = job.fetch(self.spark, start, now).cache()
+        try:
+            if job.spec.needs_incremental:
+                n = self.warehouse.upsert(job.spec, rows, order_col=job.order_col)
+            else:
+                n = rows.count()
+                if n:
+                    self.warehouse.overwrite(job.spec, rows)
+        finally:
+            rows.unpersist()
         self.notify(f"updated {name}: {n} rows")
         return n
 
     def update_all(self, now: datetime | None = None) -> dict[str, int]:
         """Dims first, then facts, then derived — the reference's
-        dependency order (ch:1862-1890)."""
-        order = sorted(
-            self.jobs,
-            key=lambda n: {"dim": 0, "fact": 1, "derived": 2}[self.jobs[n].spec.kind],
-        )
-        results = {}
-        for name in order:
+        dependency order (ch:1862-1890). The tables of one tier run
+        concurrently, one ``InheritableThread`` each (so the caller's
+        job group and scheduler pool carry over); the next tier starts
+        when the whole tier is done. ``now`` is taken once for the
+        tick. A table that raises reports -1 and the others still run.
+
+        The threads share this pipeline's ``Warehouse``: each mutates
+        a different table, so no writer lease is shared. Do not call
+        this inside a ``Warehouse.transaction()`` — the threads would
+        all join that one transaction."""
+        now = now or _utcnow()
+        results: dict[str, int] = {}
+
+        def run(name: str) -> None:
             try:
                 results[name] = self.update_table(name, now)
             except Exception as e:  # keep going, like the reference's per-table try
                 self.notify(f"failed to update {name}: {e}")
                 results[name] = -1
-        return results
+
+        tiers = [[n for n, j in self.jobs.items() if j.spec.kind == kind] for kind in TIERS]
+        for names in tiers:
+            threads = [InheritableThread(run, args=(name,)) for name in names]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+        return {name: results[name] for names in tiers for name in names}
 
     # ----------------------------------------------------- scheduler
 
@@ -151,10 +174,7 @@ class Pipeline:
             catalog.BN_SPOT_KLINES, since=warmup, until=end
         )
         prem = premium_wma(perp, spot, str(start), str(end))
-        n = prem.count()
-        if n:
-            self.warehouse.upsert(catalog.BN_PREMIUM, prem, order_col=None)
-        return n
+        return self.warehouse.upsert(catalog.BN_PREMIUM, prem, order_col=None)
 
     def validate(self, table: str = "bn_spot_klines", interval_hours: int = 1) -> DataFrame:
         """The recurring gap audit (validate_data, ch:1920-1953)."""

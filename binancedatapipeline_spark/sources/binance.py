@@ -4,8 +4,8 @@ The reference fetches per-symbol kline/funding pages with a
 ThreadPoolExecutor of 8-10 workers and driver-side pagination
 (get_historical_klines, crypto_data_pipeline_duckdb.py:883-955;
 fetch_market_klines_threadpool, duckdb:1091-1218). Here the fan-out
-is Spark tasks: the symbol list becomes a DataFrame, repartitioned to
-the desired parallelism, and ``mapInPandas`` runs the pagination
+is Spark tasks: the symbol list becomes a DataFrame spread over the
+desired parallelism, and ``mapInPandas`` runs the pagination
 loop per partition — so on a cluster the fetch scales with
 executors, with a per-task token-bucket rate limiter replacing the
 reference's @sleep_and_retry/@limits decorators (duckdb:434-440).
@@ -422,13 +422,18 @@ def _symbol_fanout(
     spark: SparkSession, symbols: list[str] | DataFrame, parallelism: int
 ) -> DataFrame:
     """Normalize a symbol list/DataFrame to a one-column ``symbol``
-    relation repartitioned to the fetch parallelism — the fan-out
-    scaffold every per-symbol fetcher shares."""
+    relation spread over the fetch parallelism — the fan-out scaffold
+    every per-symbol fetcher shares. A list becomes ``min(parallelism,
+    n)`` range partitions indexing a literal array: no shuffle, so the
+    fetch is one stage."""
     if isinstance(symbols, DataFrame):
         sym_df = symbols.select(F.col(symbols.columns[0]).alias("symbol"))
-    else:
-        sym_df = spark.createDataFrame([(s,) for s in symbols], "symbol string")
-    return sym_df.repartition(parallelism, "symbol")
+        return sym_df.repartition(parallelism, "symbol")
+    n = len(symbols)
+    names = F.array(*[F.lit(s) for s in symbols]).cast("array<string>")
+    return spark.range(n, numPartitions=min(parallelism, n)).select(
+        F.element_at(names, F.col("id").cast("int") + 1).alias("symbol")
+    )
 
 
 def _paginate_klines(api, symbol: str, interval: str, start_ms: int, end_ms: int,

@@ -47,14 +47,13 @@ def stream_upsert(
 
     ``on_batch(batch_id, row_count)`` is the notification hook seam
     (≙ the reference's Telegram alert after each update,
-    scheduler_clickhouse.py:25-64)."""
+    scheduler_clickhouse.py:25-64); ``row_count`` is what
+    :meth:`Warehouse.upsert` returns, the batch rows after dedup."""
     if watermark and spec.time_column:
         stream = stream.withWatermark(spec.time_column, watermark)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        n = batch_df.count()
-        if n:
-            warehouse.upsert(spec, batch_df, order_col=order_col)
+        n = warehouse.upsert(spec, batch_df, order_col=order_col)
         if on_batch:
             on_batch(batch_id, n)
 
@@ -213,20 +212,17 @@ def stream_extreme_alerts(
         # ledger write can land as ONE atomic cross-table transaction
         # below (a crash anywhere leaves no tick where the premium
         # rows are visible without their alerts, or vice versa).
-        has_batch = bool(batch_df.take(1))
-        if has_batch:
-            batch_df = premium_spec.align(
-                batch_df.dropDuplicates(pk)
-            ).persist()
+        batch_df = premium_spec.align(batch_df.dropDuplicates(pk)).persist()
         events = None
         window_since = None
         try:
+            # one small agg over the persisted micro-batch: its size and
+            # its max time (the batch is not committed yet)
+            n, bmax = batch_df.agg(F.count(F.lit(1)), F.max(tcol)).first()
+            has_batch = n > 0
             if has_batch:
-                # horizon: zero-job manifest watermark ∪ the in-flight
-                # batch (the batch is not committed yet — one small agg
-                # over the persisted micro-batch)
+                # horizon: zero-job manifest watermark ∪ the in-flight batch
                 horizon = warehouse.latest_timestamp(premium_spec)
-                bmax = batch_df.agg(F.max(tcol)).first()[0]
                 if bmax is not None:
                     horizon = bmax if horizon is None else max(horizon, bmax)
                 stored = None
@@ -355,8 +351,7 @@ def stream_extreme_alerts(
                 rendered.unpersist()
                 to_send.unpersist()
         finally:
-            if has_batch:
-                batch_df.unpersist()
+            batch_df.unpersist()
 
     writer = premium_stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

@@ -1404,24 +1404,28 @@ class Warehouse:
         )
         return table
 
-    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> None:
+    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> int:
         """PK-upsert restricted to the date partitions the batch
         touches. Replay-idempotent (T3/T4); crash-atomic and
         snapshot-visible via the stage-plan-manifest protocol (module
-        docstring).
+        docstring). Returns the batch rows upserted, counted after the
+        keep-last dedup; an empty batch leaves the table untouched.
 
-        Plan: dedup batch keep-last → read ONLY affected partitions
-        of the target (manifest-pruned file list) → anti-join out
-        superseded rows → union → stage the rewritten partitions →
-        publish by immutable file moves + one manifest replace (plus
-        explicit drops for touched partitions whose every row moved
-        elsewhere)."""
+        Plan: dedup batch keep-last → one ``groupBy(ds).count()``
+        collect gives both the batch size (broadcast choice) and the
+        touched partitions → read ONLY those partitions of the target
+        (manifest-pruned file list) → anti-join out superseded rows →
+        union → stage the rewritten partitions → publish by immutable
+        file moves + one manifest replace (plus explicit drops for
+        touched partitions whose every row moved elsewhere). The
+        batch is evaluated twice (the aggregate, then the write):
+        cache an expensive source before calling."""
         with self._writer_lock(spec.name) as fence:
-            self._upsert_locked(spec, updates, order_col, fence)
+            return self._upsert_locked(spec, updates, order_col, fence)
 
     def _upsert_locked(
         self, spec: TableSpec, updates: DataFrame, order_col: str | None, fence: int
-    ) -> None:
+    ) -> int:
         self.recover(spec.name)
         # dedup before align: the ordering column may be auxiliary
         # (e.g. a batch sequence number) and not part of the schema
@@ -1432,17 +1436,24 @@ class Warehouse:
         updates = spec.align(updates)
 
         if not self.exists(spec.name):
-            self.overwrite(spec, updates)
-            return
+            n = updates.count()
+            if n:
+                self.overwrite(spec, updates)
+            return n
 
         # broadcast the batch keys into the anti-join only when the
         # batch is genuinely small — an hourly tick is, a backfill is
         # not, and force-broadcasting a backfill OOMs real executors.
-        # (count() here is cheap next to the rewrite that follows.)
+        if spec.partition_date_source is None:
+            n = updates.count()
+        else:
+            per_ds = self._with_ds(spec, updates).groupBy(DS_COL).count().collect()
+            n = sum(r["count"] for r in per_ds)
+            touched = {r[DS_COL] for r in per_ds}
+        if not n:
+            return 0
         keys = updates.select(*spec.primary_keys)
-        anti_build = (
-            F.broadcast(keys) if updates.count() <= 1_000_000 else keys
-        )
+        anti_build = F.broadcast(keys) if n <= 1_000_000 else keys
 
         if spec.partition_date_source is None:
             live = self._read_live(spec.name, spec=spec)
@@ -1457,10 +1468,7 @@ class Warehouse:
             self._commit(spec.name, stage, staged, moves, None, fence,
                          stats_column=spec.time_column,
                          extra_stats=spec.stats_columns)
-            return
-
-        updates_ds = self._with_ds(spec, updates)
-        touched = {r[DS_COL] for r in updates_ds.select(DS_COL).distinct().collect()}
+            return n
 
         # When the partition source column is NOT part of the PK (e.g.
         # bn_option_symbols_exercised: PK (symbol, exchange),
@@ -1504,7 +1512,8 @@ class Warehouse:
         replaced = {_ds_key(ds) for ds in touched} | set(staged)
         self._commit(spec.name, stage, staged, moves, replaced, fence,
                      stats_column=spec.time_column,
-                         extra_stats=spec.stats_columns)
+                     extra_stats=spec.stats_columns)
+        return n
 
     # ------------------------------------------------------ maintenance
 
@@ -1654,9 +1663,9 @@ class _Transaction:
             self.stack.enter_context(self.wh._writer_lock(name))
             self.owned.add(name)
 
-    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> None:
+    def upsert(self, spec: TableSpec, updates: DataFrame, order_col: str | None = None) -> int:
         self._own(spec.name)
-        self.wh.upsert(spec, updates, order_col)
+        return self.wh.upsert(spec, updates, order_col)
 
     def overwrite(self, spec: TableSpec, df: DataFrame) -> None:
         self._own(spec.name)
